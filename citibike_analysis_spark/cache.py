@@ -30,11 +30,12 @@ persistent RDDs.
 
 from __future__ import annotations
 
-import os
 import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
+
+from citibike_analysis_spark.session import is_single_jvm_master
 
 _lock = threading.RLock()
 _LIVE: list[DataFrame] = []
@@ -54,54 +55,42 @@ def track(df: DataFrame) -> DataFrame:
     return df
 
 
-def reuse(df: DataFrame, env: str = "SPARK_GRAFT_DEDUP_REUSE") -> DataFrame:
+def reuse(df: DataFrame) -> DataFrame:
     """Materialize-once strategy for an intermediate that feeds 2-3 plan
     branches (inverted indexes, LSH signatures, candidate lists). Without
     it Spark re-executes the full upstream pipeline (tokenize, shingle,
     sign, band) once per referencing branch.
 
-    Strategy is selectable via ``env`` = ``persist`` (default) |
-    ``checkpoint`` | ``none``. Measured A/B (scripts/ab_reuse.py, sf0.1,
-    fresh SparkSession per strategy — NB shared gateway JVM, so JIT
-    warmth biases against the first strategy; see that script's caveat —
-    5 reps, min/median over q36/q34/q50/q92): any materialization beats
-    none (q34 ×1.2, q50 ×1.35 slower without), and checkpoint measured
-    ~10% faster than persist locally (q36 min 2.06 s vs 2.59 s; within
-    the protocol's warmth-bias band). persist stays the DEFAULT because
-    ``localCheckpoint`` truncates lineage: a lost executor makes its
-    blocks unrecoverable and fails the query, while persist recomputes
-    from lineage — on a large cluster with preemption/decommissioning
-    that reliability gap is worth far more than 10% of a local run.
-    Deployments on stable executors can flip the knob. At corpus scale
-    the index may exceed memory; persist degrades to per-partition disk
-    blocks — the same worst case checkpoint always pays.
+    The frame is persisted and registered for :func:`cache_scope` /
+    :func:`release_all` cleanup. Measured A/B (sf0.1, fresh SparkSession
+    per strategy, 5 reps, min/median over q36/q34/q50/q92): any
+    materialization beats none (q34 ×1.2, q50 ×1.35 slower without),
+    and ``localCheckpoint`` measured ~10% faster than persist locally
+    (q36 min 2.06 s vs 2.59 s; within the protocol's warmth-bias band).
+    persist is the strategy because ``localCheckpoint`` truncates
+    lineage: a lost executor makes its blocks unrecoverable and fails
+    the query, while persist recomputes from lineage — on a large
+    cluster with preemption/decommissioning that reliability gap is
+    worth far more than 10% of a local run. At corpus scale the index
+    may exceed memory; persist degrades to per-partition disk blocks —
+    the same worst case checkpoint always pays.
 
-    Both materializing strategies register the frame for
-    :func:`cache_scope` / :func:`release_all` cleanup.
-
-    ``SPARK_GRAFT_REUSE_EAGER=1`` additionally materializes the persist
-    with a ``count()`` before returning. Background (r14 profiling,
-    guide §7.1): under AQE an action materializes all its shuffle /
-    broadcast stages CONCURRENTLY, and every stage subtree referencing
-    a still-cold persist races to compute the same blocks — a task that
-    finds a block's write lock held computes the iterator itself
+    Eager materialization (r14 profiling, guide §7.1): under AQE an
+    action materializes all its shuffle / broadcast stages
+    CONCURRENTLY, and every stage subtree referencing a still-cold
+    persist races to compute the same blocks — a task that finds a
+    block's write lock held computes the iterator itself
     (BlockInfoManager semantics), so the pipeline can run once PER
     BRANCH (q46's one-partition inverted index was evaluated EIGHT
-    times inside one execution — 8 identical ~0.9 s jobs). Eager
-    materialization removes that redundancy, but measured LOCALLY it
-    does not pay: the redundant evaluations run concurrently on
-    otherwise-idle cores (off the critical path) while the count() is a
-    serial barrier on it — fresh-JVM min-of-3 at sf0.1: q34 0.82 s lazy
-    vs 1.16 eager, q36 2.60 vs 3.48, q143 1.05 vs 1.33, q46 equal. The
-    default therefore stays LAZY; on a saturated production cluster the
-    redundant branch evaluations cost real resources and the knob is
-    the documented remedy.
+    times inside one execution — 8 identical ~0.9 s jobs). On a
+    multi-process master :func:`reuse` therefore runs a ``count()``
+    on the persist before returning (see :func:`_eager_default`), so
+    BUILDING a plan that reuses an intermediate already runs a job —
+    and so does every path that only builds a plan (``explain``, plan
+    capture). No opt-out is offered, by design: a plan-only caller on
+    a cluster pays one materialization pass that the action would pay
+    anyway. On ``local[N]`` the persist stays lazy.
     """
-    mode = os.environ.get(env, "persist")
-    if mode == "checkpoint":
-        return track(df.localCheckpoint(eager=False))
-    if mode == "none":
-        return df
     out = track(df.persist())
     if _eager_default(df):
         out.count()
@@ -111,8 +100,7 @@ def reuse(df: DataFrame, env: str = "SPARK_GRAFT_DEDUP_REUSE") -> DataFrame:
 def _eager_default(df: DataFrame) -> bool:
     """Whether :func:`reuse` should materialize the persist eagerly.
 
-    ``SPARK_GRAFT_REUSE_EAGER`` (``1``/``0``) always wins. Unset, the
-    default is keyed to the MASTER (r15, r14-verdict item #2): on a
+    Keyed to the MASTER (r15, r14-verdict item #2): on a
     single-JVM ``local[N]`` the redundant branch evaluations the lazy
     race tolerates run concurrently on otherwise-idle cores while an
     eager ``count()`` is a serial barrier on the critical path —
@@ -129,14 +117,11 @@ def _eager_default(df: DataFrame) -> bool:
     evaluation is a full extra pass over the reused intermediate, so
     eager is the right multi-process default. The master test is the
     same single-JVM check pick_pair_dot keys on."""
-    flag = os.environ.get("SPARK_GRAFT_REUSE_EAGER")
-    if flag is not None:
-        return flag == "1"
     try:
         master = df.sparkSession.sparkContext.master
     except Exception:  # noqa: BLE001 - session mid-teardown: stay lazy
         return False
-    return not (master == "local" or master.startswith("local["))
+    return not is_single_jvm_master(master)
 
 
 def _checkpoint_rdd(df: DataFrame):

@@ -196,11 +196,19 @@ def encode_documents(
     (absent from the vocab) encode as -1.
 
     Plan shape: posexplode (position is load-bearing — the sequence must
-    be rebuilt in order), broadcast-or-shuffle equi-join against the
-    vocab on the token, then groupBy doc re-assembling with
+    be rebuilt in order), broadcast equi-join against the vocab on the
+    token, then groupBy doc re-assembling with
     array_sort(collect_list(struct(pos, id))) — the same
     order-restoring aggregation as dedup_chunks' reassembly. Empty
     documents produce an empty array.
+
+    Size contract: ``vocab`` must fit one broadcast. The join always
+    broadcasts it (an explicit hint, so there is no shuffle-join
+    fallback); an oversized vocab fails the broadcast build on the
+    driver rather than degrading. :func:`build_vocab` output already
+    satisfies this — its global rank window requires the vocabulary
+    to fit a single task — so a caller passing any other frame must
+    prune it to that size first.
     """
     from citibike_analysis_spark.partitioning import spread
 

@@ -321,7 +321,7 @@ def pq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     carry_cols: list[str] | None = None,
-    method: str | None = None,
+    method: str = "arrow",
 ) -> DataFrame:
     """Encode a corpus against trained codebooks: (vec_id, codes
     array<int>, recon_norm double). ``recon_norm`` is |x̂| — the L2
@@ -335,7 +335,7 @@ def pq_encode(
     — an avoided corpus-scale shuffle); names must not collide with
     the internal ``cid``/``sub_j``/``_sv``/``_v``.
 
-    ``method`` (default env ``SPARK_GRAFT_PQ_ENCODE``, else "arrow"):
+    ``method`` (default "arrow"):
 
     - ``"arrow"`` (r14, r13 verdict #5): one SHUFFLE-FREE projection
       through :func:`_make_encode_udf` — the per-subvector argmin is
@@ -352,8 +352,6 @@ def pq_encode(
       regroup plan in pure JVM expressions — the parity reference,
       and the no-Python-worker fallback.
     """
-    import os
-
     m = len(codebooks)
     dsub = len(codebooks[0][0][1])
     carry = carry_cols or []
@@ -362,8 +360,6 @@ def pq_encode(
         *carry,
         as_double(F.col(vec_col)).alias("_v"),
     )
-    if method is None:
-        method = os.environ.get("SPARK_GRAFT_PQ_ENCODE", "arrow")
     if method == "arrow":
         enc = _make_encode_udf(codebooks)
         return c.select(
@@ -608,7 +604,7 @@ def pq_topk_rerank(
     from citibike_analysis_spark.operators.similarity import (
         _cand_broadcast_max_rows,
         _ivf_probe_divisor,
-        ivf_pair_dot,
+        dot as _dot,
     )
 
     n_q = (
@@ -642,15 +638,14 @@ def pq_topk_rerank(
         else (lambda d: d)
     )
     # the shortlist join carries both vectors on the row — the IVF
-    # verify shape, same measured dot keying (fold; r11)
-    pdot = ivf_pair_dot(corpus.sparkSession)
+    # verify shape, so the same measured per-pair fold (r11, ivf_topk)
     scored = (
         cv.join(cand_hint(cand), "neighbor_id")
         .join(qv_hint(qv), "query_id")
         .withColumn(
             "cosine_sim",
             F.round(
-                pdot(F.col("_qv"), F.col("_cv"))
+                _dot(F.col("_qv"), F.col("_cv"))
                 / F.greatest(F.col("_qn") * F.col("_cn"), F.lit(1e-300)),
                 6,
             ),
@@ -1068,7 +1063,6 @@ def ivfpq_topk(
         _ivf_probe_divisor,
         _load_ivf_cents,
         dot as _dot,
-        ivf_pair_dot,
         norm as _norm,
     )
 
@@ -1161,14 +1155,13 @@ def ivfpq_topk(
         "neighbor_id", F.col("_cv")
     ).withColumn("_cn", _norm(F.col("_cv")))
     qv = q.withColumn("_qn", _norm(F.col("_qv")))
-    pdot = ivf_pair_dot(spark)
     scored = (
         cv.join(short_hint(short), "neighbor_id")
         .join(qv_hint(qv), "query_id")
         .withColumn(
             "cosine_sim",
             F.round(
-                pdot(F.col("_qv"), F.col("_cv"))
+                _dot(F.col("_qv"), F.col("_cv"))
                 / F.greatest(F.col("_qn") * F.col("_cn"), F.lit(1e-300)),
                 6,
             ),

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from citibike_analysis_spark.cache import track
+from citibike_analysis_spark.session import is_single_jvm_master
 
 
 def as_double(vec: Column) -> Column:
@@ -162,8 +163,8 @@ def _pair_stage_width(spark, est_rows: int | None, row_bytes: int = 48) -> int:
 
 
 def pick_pair_dot(spark, n_rows: int | None = None) -> "Callable[[Column, Column], Column]":
-    """Per-pair dot choice for verify stages (r08 A/B,
-    `scripts/ab_pair_dot.py`), keyed on master AND corpus size:
+    """Per-pair dot choice for verify stages (r08 A/B), keyed on master
+    AND corpus size:
 
     - any MULTI-PROCESS master → :func:`pair_dot` (Arrow einsum). The
       interpreted :func:`dot` fold is JIT-flappy on executor JVMs
@@ -182,52 +183,10 @@ def pick_pair_dot(spark, n_rows: int | None = None) -> "Callable[[Column, Column
     Outputs are identical at the 6-decimal rounding every consumer
     COMPARES at (r09: rank windows and θ gates operate on
     ``round(sim, 6)``, pytest-pinned equal across both paths), so the
-    keying provably cannot change a result — only wall time.
-    ``SPARK_GRAFT_PAIR_DOT`` = ``fold`` | ``arrow`` overrides (the A/B
-    instrument)."""
-    import os
-
-    mode = os.environ.get("SPARK_GRAFT_PAIR_DOT")
-    if mode is None:
-        single_jvm = _is_single_jvm_master(spark.sparkContext.master)
-        big = n_rows is not None and n_rows >= _ARROW_DOT_MIN_ROWS
-        mode = "fold" if (single_jvm and not big) else "arrow"
-    return dot if mode == "fold" else pair_dot
-
-
-def ivf_pair_dot(spark) -> "Callable[[Column, Column], Column]":
-    """Per-pair dot for the IVF verify stage: the FOLD, on every
-    master — measured, not assumed (r11, x100 = 200k vecs / 18.75M
-    candidate pairs, interleaved in-JVM A/B): local[32] fold
-    20.5–25.9 s vs arrow 59.5–65.4 s; local-cluster[2,16,24g] fold
-    21.9/22.6 s vs arrow 29.8/41.2 s — identical 5,000 result rows
-    both times. IVF's shape inverts the near-dup keying
-    (:func:`pick_pair_dot`): there the candidates are BARE id pairs
-    and the Arrow seam replaced per-pair interpreted folds cheaply;
-    here both d-dim vectors are already materialized on the joined
-    row, so the Arrow path adds ~2×dim doubles/pair of socket
-    serialization (~19 GB at the measured point) against a fold that
-    stays stable across process boundaries (no JIT flap observed at
-    either master — 2% spread). ``SPARK_GRAFT_PAIR_DOT`` still
-    overrides for A/B; results are mode-identical at the 6-decimal
-    rounded rank (pytest-pinned)."""
-    import os
-
-    mode = os.environ.get("SPARK_GRAFT_PAIR_DOT", "fold")
-    return dot if mode == "fold" else pair_dot
-
-
-def _is_single_jvm_master(master: str) -> bool:
-    """True iff tasks share the driver's JVM (warm-JIT fold territory).
-
-    ``local``, ``local[N]``, ``local[N,maxFailures]`` and ``local[*]``
-    are the single-JVM masters; ``local-cluster[...]`` (no bracket
-    directly after "local") and every real cluster URL (spark://,
-    yarn, k8s://...) run executors in separate processes. r08 keyed on
-    ``startswith("local[")`` alone, which classified the bare
-    ``local`` string as multi-process — harmless for results but a
-    pointless Arrow tax on a 1-core master (r09 VERDICT nit)."""
-    return master == "local" or master.startswith("local[")
+    keying provably cannot change a result — only wall time."""
+    single_jvm = is_single_jvm_master(spark.sparkContext.master)
+    big = n_rows is not None and n_rows >= _ARROW_DOT_MIN_ROWS
+    return dot if (single_jvm and not big) else pair_dot
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -1230,16 +1189,12 @@ def _compact_one_table(
 #: the measured failure point even after the broadcast relation's
 #: object overhead. Above the cap the probe uses shuffle joins (same
 #: results, exchange-free on the bucketed index sides).
-#: ``SPARK_GRAFT_CAND_BROADCAST_MAX`` overrides (instruments/tests).
 _CAND_BROADCAST_MAX_ROWS = 2_000_000
 
 
 def _cand_broadcast_max_rows() -> int:
-    import os
-
-    return int(
-        os.environ.get("SPARK_GRAFT_CAND_BROADCAST_MAX", _CAND_BROADCAST_MAX_ROWS)
-    )
+    """The cap, read at call time so tests can lower the module constant."""
+    return _CAND_BROADCAST_MAX_ROWS
 
 
 def _cand_pair_estimate(
@@ -1307,8 +1262,7 @@ def lsh_index_topk(
     probes in 2.8 s). The probe now PREFLIGHTS that estimate —
     ``n_vectors / 2^bits × tables × n_queries`` from the counts the
     stamp verification already pays plus one query-side count — and
-    above :data:`_CAND_BROADCAST_MAX_ROWS` (override:
-    ``SPARK_GRAFT_CAND_BROADCAST_MAX``) switches to SHUFFLE joins
+    above :data:`_CAND_BROADCAST_MAX_ROWS` switches to SHUFFLE joins
     instead of OOMing mid-query: the bucketed layout keeps both index
     sides exchange-free (buckets on (tbl,bkt), vectors on
     neighbor_id), so only the query/candidate side shuffles —
@@ -1502,7 +1456,7 @@ def _assign_nearest(
     vec: str,
     cents,
     with_euclid: bool = False,
-    method: str | None = None,
+    method: str = "arrow",
 ) -> DataFrame:
     """Assign each vector to its max-cosine centroid: broadcast-join then
     min(struct) pick — the group key is the id, the vector rides as
@@ -1535,9 +1489,9 @@ def _assign_nearest(
     driver-side), so a zero vector scores cosine 0.0 against every
     centroid and deterministically lands in the lowest-cid cluster.
 
-    ``method`` (default env ``SPARK_GRAFT_ASSIGN``, else "arrow",
-    r14): the fold form above is ALSO a shuffle — the vector rides the
-    groupBy's any_value through an Exchange, so every build/append/
+    ``method`` (default "arrow", r14): the fold form above is ALSO a
+    shuffle — the vector rides the groupBy's any_value through an
+    Exchange, so every build/append/
     kmeans iteration moved corpus-scale vector bytes once — and its
     per-(row × centroid) dot runs interpreted. The "arrow" form
     (:func:`_make_assign_udf`) is one shuffle-free projection whose
@@ -1553,10 +1507,7 @@ def _assign_nearest(
     with identical stamps and per-cid histograms both cells.
     """
     import numpy as np
-    import os
 
-    if method is None:
-        method = os.environ.get("SPARK_GRAFT_ASSIGN", "arrow")
     if method == "arrow":
         assign = _make_assign_udf(cents, with_euclid)
         out_cols = [
@@ -2011,16 +1962,17 @@ def ivf_topk(
     # norms hoisted per side (bit-identical; near_duplicate_embeddings
     # finding): every list member joins ~queries·nprobe/nlist probes, so
     # one fold per corpus row beats two extra folds per pair. The one
-    # remaining per-pair dot is IVF-keyed (r11, see ivf_pair_dot: the
-    # FOLD wins on every measured master for this shape — both vectors
-    # already ride the joined row, so Arrow adds ~2×dim doubles/pair of
-    # serialization; measured 2.5×/1.4× slower at x100 on local[32] /
-    # local-cluster), and the rank compares the ROUNDED cosine (r09
+    # remaining per-pair dot is the FOLD on every master (r11, x100 =
+    # 200k vecs / 18.75M candidate pairs, interleaved in-JVM A/B:
+    # local[32] fold 20.5–25.9 s vs arrow 59.5–65.4 s;
+    # local-cluster[2,16,24g] fold 21.9/22.6 s vs arrow 29.8/41.2 s).
+    # IVF's shape inverts the near-dup keying (pick_pair_dot): both
+    # d-dim vectors already ride the joined row, so Arrow adds ~2×dim
+    # doubles/pair of serialization, while the fold showed no JIT flap
+    # at either master. The rank compares the ROUNDED cosine (r09
     # convention: the fold and the Arrow einsum differ in the last
-    # ULP, so a knife-edge rank-k pick must not depend on which path
-    # the env override ran; ties at the 6-decimal precision break on
-    # neighbor_id). q49's epoch is bumped with its q107 audit.
-    pdot = ivf_pair_dot(corpus.sparkSession)
+    # ULP; ties at the 6-decimal precision break on neighbor_id).
+    # q49's epoch is bumped with its q107 audit.
     hint = F.broadcast
     if n_queries is not None and centroids:
         dim = len(centroids[0][1])
@@ -2033,7 +1985,7 @@ def ivf_topk(
         .withColumn(
             "cosine_sim",
             F.round(
-                pdot(F.col("_qv"), F.col("_cv"))
+                dot(F.col("_qv"), F.col("_cv"))
                 / F.greatest(F.col("_qn") * F.col("_cn"), F.lit(1e-300)),
                 6,
             ),
@@ -2344,10 +2296,9 @@ def ivf_index_topk(
         if n_q * nprobe <= _cand_broadcast_max_rows() // _ivf_probe_divisor(dim)
         else (lambda d: d)
     )
-    # same IVF-keyed per-pair dot and rounded-rank convention as
-    # ivf_topk (r11 — see ivf_pair_dot): both paths key identically,
-    # so index-vs-in-memory probe equality is preserved by construction
-    pdot = ivf_pair_dot(spark)
+    # same per-pair fold and rounded-rank convention as ivf_topk (r11):
+    # both paths score identically, so index-vs-in-memory probe
+    # equality is preserved by construction
     scored = (
         lists.withColumn("_cn", norm(F.col("_cv")))
         .join(hint(probes), "cid")
@@ -2355,7 +2306,7 @@ def ivf_index_topk(
         .withColumn(
             "cosine_sim",
             F.round(
-                pdot(F.col("_qv"), F.col("_cv"))
+                dot(F.col("_qv"), F.col("_cv"))
                 / F.greatest(F.col("_qn") * F.col("_cn"), F.lit(1e-300)),
                 6,
             ),
@@ -2809,9 +2760,7 @@ def near_duplicate_embeddings(
     q39's boundary ratio from 2.38×/1.68× (r07) to **1.09×** at 10×,
     and on single-JVM ``local[N]`` once the corpus passes the measured
     crossover (~50k rows: fold wins 0.79× at 20k vecs, arrow wins
-    1.72× at 200k — see :func:`pick_pair_dot`). Measured by
-    ``scripts/ab_pair_dot.py``; ``SPARK_GRAFT_PAIR_DOT=fold|arrow``
-    overrides the keying.
+    1.72× at 200k — see :func:`pick_pair_dot`).
     """
     n_rows = None
     if bits == "auto":

@@ -91,18 +91,23 @@ def approx_ntile_multi(
     # the bucket expression, or worse, drop() deleting the user's column
     # (review finding; same convention as asof.py's __asof_* internals)
     cut_cols = [f"__ntile_cuts_{i}" for i in range(len(value_cols))]
+    # quoted identifiers: a name is interpolated into SQL text, so an
+    # embedded backtick is doubled (the SQL escape) rather than ending
+    # the identifier early; the bucket side quotes the same way because
+    # F.col rejects a bare backtick inside an unquoted name
+    quoted = ["`" + c.replace("`", "``") + "`" for c in value_cols]
     cuts = df.select(
         *[
             F.expr(
-                f"percentile_approx(`{c}`, array({qs_sql}), {acc})"
+                f"percentile_approx({q}, array({qs_sql}), {acc})"
             ).alias(cc)
-            for c, cc in zip(value_cols, cut_cols)
+            for q, cc in zip(quoted, cut_cols)
         ]
     )
     with_cuts = df.join(F.broadcast(cuts))
-    for c, cc, out in zip(value_cols, cut_cols, outs):
+    for q, cc, out in zip(quoted, cut_cols, outs):
         bucket = F.lit(1) + F.size(
-            F.filter(F.col(cc), lambda x: x <= F.col(c))
+            F.filter(F.col(cc), lambda x: x <= F.col(q))
         )
         with_cuts = with_cuts.withColumn(out, bucket.cast("long"))
     return with_cuts.drop(*cut_cols)

@@ -43,6 +43,21 @@ RUNTIME_CONF: dict[str, str] = {
 }
 
 
+def is_single_jvm_master(master: str) -> bool:
+    """True iff tasks share the driver's JVM (warm-JIT fold territory).
+
+    ``local``, ``local[N]``, ``local[N,maxFailures]`` and ``local[*]``
+    are the single-JVM masters; ``local-cluster[...]`` (no bracket
+    directly after "local") and every real cluster URL (spark://,
+    yarn, k8s://...) run executors in separate processes. r08 keyed on
+    ``startswith("local[")`` alone, which classified the bare
+    ``local`` string as multi-process — harmless for results but a
+    pointless Arrow tax on a 1-core master (r09 VERDICT nit). Both the
+    pair-dot keying (operators/similarity.py) and the eager-reuse
+    default (cache.py) key on this one predicate."""
+    return master == "local" or master.startswith("local[")
+
+
 def _package_archive() -> str | None:
     """Zip this package for executor shipment (idempotent, content-hashed).
 

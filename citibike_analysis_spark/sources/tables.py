@@ -47,28 +47,44 @@ _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 # schema from the metastore instead; this dict is that metastore role
 # for the path-addressed testdata. METADATA only — the scan itself
 # still reads the parquet data at every action (nothing about results
-# or row data is cached), and the key includes the file mtime so
-# regenerated testdata invalidates immediately. Keyed on applicationId:
-# schema resolution depends on session confs (nanosAsLong /
-# inferTimestampNTZ), so a schema never leaks across sessions.
-# ``SPARK_GRAFT_SCHEMA_CACHE=0`` disables (A/B instrument).
+# or row data is cached). Each entry is keyed on (applicationId, path)
+# and stamped with the path's newest mtime (:func:`_newest_mtime`), so
+# regenerated or rewritten data invalidates immediately. Schema
+# resolution depends on session confs (nanosAsLong /
+# inferTimestampNTZ), so a schema never leaks across sessions: an
+# insert evicts every other application's entries, which also keeps
+# the dict bounded to one entry per path.
 _SCHEMA_CACHE: dict = {}
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    if os.environ.get("SPARK_GRAFT_SCHEMA_CACHE", "1") != "1":
-        return spark.read.parquet(path)
+def _newest_mtime(path: str) -> int:
+    """Newest mtime (ns) of ``path``: the file itself, or — for a
+    directory-shaped dataset — of the directory and every entry below
+    it. A part file overwritten in place does not bump its directory's
+    mtime, so the directory's own stamp alone would serve a stale
+    schema. -1 when the path cannot be stat-ed (e.g. a remote URL)."""
     try:
-        mtime = os.path.getmtime(path)
+        newest = os.stat(path).st_mtime_ns
+        for root, dirs, files in os.walk(path):
+            for name in dirs + files:
+                newest = max(newest, os.stat(os.path.join(root, name)).st_mtime_ns)
     except OSError:
-        mtime = -1.0
-    key = (spark.sparkContext.applicationId, path, mtime)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
+        return -1
+    return newest
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    app = spark.sparkContext.applicationId
+    mtime = _newest_mtime(path)
+    hit = _SCHEMA_CACHE.get((app, path))
+    if hit is not None and hit[0] == mtime:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    for key in list(_SCHEMA_CACHE):
+        if key[0] != app:
+            _SCHEMA_CACHE.pop(key, None)
+    _SCHEMA_CACHE[(app, path)] = (mtime, df.schema)
+    return df
 
 
 def ns_long_to_ntz(colname: str) -> F.Column:

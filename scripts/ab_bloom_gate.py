@@ -7,7 +7,7 @@ broadcast join costs 0.63 s vs the bloom's 4.1 s constant overhead.
 This script turns the claim into artifacts:
 
 1. CROSSOVER — times three cells, interleaved within each pass, fresh
-   JVM per cell (the ab_trees protocol):
+   JVM per cell:
      exact/bcast    — contamination_flags, auto-broadcast ON (the
                       fixture regime; bloom's documented loss);
      exact/shuffle  — contamination_flags with

@@ -6,7 +6,7 @@ broadcast over RPC, and masks missing package deployment (see
 tests/test_cluster_boundary.py). This script puts REAL executor
 processes under the near-dup family + flagship: it times the same
 queries on ``local[32]`` and ``local-cluster[2,16,24576]`` (2 executor
-JVMs x 16 cores x 24g — same 32 total cores) with the ab_trees
+JVMs x 16 cores x 24g — same 32 total cores) with an interleaved
 protocol — fresh JVM per (master, pass), per-rep cache isolation, min
 over reps, masters interleaved across passes so host drift lands
 inside both records.

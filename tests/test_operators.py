@@ -16,6 +16,9 @@ import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.01"
+# the probe-side candidate-broadcast cap, lowered by tests to force the
+# shuffle fallback
+_CAND_CAP = "citibike_analysis_spark.operators.similarity._CAND_BROADCAST_MAX_ROWS"
 
 
 @pytest.fixture(scope="module")
@@ -140,6 +143,22 @@ class TestApproxNtile:
         a = sorted(map(tuple, chained.select(*key, *outs).collect()))
         b = sorted(map(tuple, multi.select(*key, *outs).collect()))
         assert a == b
+
+    def test_multi_backtick_column_name(self, spark):
+        # a backtick inside a column name must be escaped where the name
+        # is interpolated into the percentile_approx SQL (it used to end
+        # the quoted identifier early and fail to parse); buckets match
+        # the same values under a plain name
+        from citibike_analysis_spark.operators.windows import approx_ntile_multi
+
+        rows = [(i, float(i % 13), float(i % 7)) for i in range(40)]
+        odd = spark.createDataFrame(rows, ["id", "v`a", "w``b"])
+        plain = spark.createDataFrame(rows, ["id", "va", "wb"])
+        got = approx_ntile_multi(odd, ["v`a", "w``b"], 4, ["q_v", "q_w"])
+        ref = approx_ntile_multi(plain, ["va", "wb"], 4, ["q_v", "q_w"])
+        a = sorted(map(tuple, got.select("id", "q_v", "q_w").collect()))
+        b = sorted(map(tuple, ref.select("id", "q_v", "q_w").collect()))
+        assert a and a == b
 
 
 class TestSpatialJoin:
@@ -540,7 +559,7 @@ class TestPersistedLshIndex:
             )
             assert broadcast_path, "empty probe proves nothing"
 
-            monkeypatch.setenv("SPARK_GRAFT_CAND_BROADCAST_MAX", "0")
+            monkeypatch.setattr(_CAND_CAP, 0)
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
             fallback = lsh_index_topk(
                 spark, "lsh_idx_cap", queries, k=5, **params
@@ -1391,7 +1410,7 @@ class TestR12IndexGuards:
             assert ref512, "empty probe proves nothing"
             # cap chosen so n_q*nprobe=10 passes ÷32 (dim 64) but not
             # ÷256 (dim 512): 320//32 = 10 ≥ 10; 320//256 = 1 < 10
-            monkeypatch.setenv("SPARK_GRAFT_CAND_BROADCAST_MAX", "320")
+            monkeypatch.setattr(_CAND_CAP, 320)
             plan64 = (
                 ivf_index_topk(spark, t64, q64, k=3, nprobe=2)
                 ._jdf.queryExecution().executedPlan().toString()
@@ -1484,7 +1503,7 @@ class TestR12IndexGuards:
         assert broadcast_path, "empty probe proves nothing"
         auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         try:
-            monkeypatch.setenv("SPARK_GRAFT_CAND_BROADCAST_MAX", "0")
+            monkeypatch.setattr(_CAND_CAP, 0)
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
             fallback = lsh_topk(
                 emb, queries, k=5, n_rows=n, n_queries=10, **params
@@ -1544,7 +1563,7 @@ class TestR12IndexGuards:
                 ),
             )
             assert with_nq < base  # the query-count job is gone
-            monkeypatch.setenv("SPARK_GRAFT_CAND_BROADCAST_MAX", "0")
+            monkeypatch.setattr(_CAND_CAP, 0)
             shortcct = jobs_during(
                 "probe_sc",
                 lambda: lsh_index_topk(spark, t, queries, k=5, **params),
@@ -1554,7 +1573,7 @@ class TestR12IndexGuards:
             key = lambda rows: sorted(
                 (r["query_id"], r["neighbor_id"], r["rk"]) for r in rows
             )
-            monkeypatch.delenv("SPARK_GRAFT_CAND_BROADCAST_MAX")
+            monkeypatch.undo()  # default cap
             assert key(
                 lsh_index_topk(
                     spark, t, queries, k=5, n_queries=10, **params
@@ -1583,7 +1602,7 @@ class TestR12IndexGuards:
         assert broadcast_path
         auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         try:
-            monkeypatch.setenv("SPARK_GRAFT_CAND_BROADCAST_MAX", "0")
+            monkeypatch.setattr(_CAND_CAP, 0)
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
             fallback = ivf_topk(emb, queries, n_queries=10, **params)
             assert key(fallback.collect()) == broadcast_path
@@ -2037,32 +2056,27 @@ class TestR14ArrowAssignParity:
         cents = _train_centroids(df, "_id", "_v", 4, 3)
         self._parity(df, cents, with_euclid=True)
 
-    def test_training_is_method_invariant(self, spark):
+    def test_training_is_method_invariant(self, spark, monkeypatch):
         """Centroids trained through either assignment path are
         IDENTICAL (the bit-parity consequence that matters most: every
         stamp and every persisted index is method-independent)."""
-        import os
+        import functools
 
-        from citibike_analysis_spark.operators.similarity import (
-            _train_centroids,
-            as_double,
-        )
+        from citibike_analysis_spark.operators import similarity as S
         from citibike_analysis_spark.sources.tables import load_table
 
         emb = load_table(spark, SF, "embeddings")
         c = emb.select(
             F.col("vec_id").alias("_id"),
-            as_double(F.col("embedding")).alias("_v"),
+            S.as_double(F.col("embedding")).alias("_v"),
         )
-        prev = os.environ.get("SPARK_GRAFT_ASSIGN")
-        try:
-            os.environ["SPARK_GRAFT_ASSIGN"] = "fold"
-            fold_cents = _train_centroids(c, "_id", "_v", 8, 3)
-            os.environ["SPARK_GRAFT_ASSIGN"] = "arrow"
-            arrow_cents = _train_centroids(c, "_id", "_v", 8, 3)
-        finally:
-            if prev is None:
-                os.environ.pop("SPARK_GRAFT_ASSIGN", None)
-            else:
-                os.environ["SPARK_GRAFT_ASSIGN"] = prev
+        assign = S._assign_nearest
+        monkeypatch.setattr(
+            S, "_assign_nearest", functools.partial(assign, method="fold")
+        )
+        fold_cents = S._train_centroids(c, "_id", "_v", 8, 3)
+        monkeypatch.setattr(
+            S, "_assign_nearest", functools.partial(assign, method="arrow")
+        )
+        arrow_cents = S._train_centroids(c, "_id", "_v", 8, 3)
         assert fold_cents == arrow_cents

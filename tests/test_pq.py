@@ -11,6 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.01"
+# the probe-side candidate-broadcast cap, lowered by tests to force the
+# shuffle fallback
+_CAND_CAP = "citibike_analysis_spark.operators.similarity._CAND_BROADCAST_MAX_ROWS"
 
 
 @pytest.fixture(scope="module")
@@ -464,7 +467,7 @@ class TestR13IvfPqMaintenance:
             )
             assert ref_idx
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            monkeypatch.setenv("SPARK_GRAFT_CAND_BROADCAST_MAX", "1")
+            monkeypatch.setattr(_CAND_CAP, 1)
             plan = (
                 ivfpq_topk(spark, t, q, k=3, nprobe=4, shortlist=20)
                 ._jdf.queryExecution()
@@ -651,7 +654,7 @@ class TestR14PqTopkPreflight:
             auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
             try:
                 spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-                monkeypatch.setenv("SPARK_GRAFT_CAND_BROADCAST_MAX", "1")
+                monkeypatch.setattr(_CAND_CAP, 1)
                 over = pq_topk(codes, q, books, k=3, n_queries=5)
                 plan = (
                     over._jdf.queryExecution().executedPlan().toString()

@@ -284,3 +284,61 @@ def test_events_reader_native_dispatch(spark, tmp):
     got2 = {r.event_id: r for r in df2.collect()}
     assert got2[0].ts == base and got2[0].ts_ns == expected_ns
     assert dict(df2.dtypes)["ts"] == "timestamp_ntz"
+
+
+def test_schema_cache_sees_part_file_rewritten_in_place(spark, tmp):
+    """The load_table schema cache must notice a directory-shaped
+    dataset whose part file is overwritten in place: the rewrite does
+    not change the directory's own mtime, so a cache stamped with that
+    mtime alone would keep serving the old schema (and drop the new
+    column from every later load)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from citibike_analysis_spark.sources import tables
+    from citibike_analysis_spark.sources.tables import load_table
+
+    ds = os.path.join(tmp, "part.parquet")
+    os.makedirs(ds)
+    part = os.path.join(ds, "part-00000.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), part)
+    assert load_table(spark, tmp, "part").columns == ["a"]
+
+    dir_stat = os.stat(ds)
+    part_mtime = os.stat(part).st_mtime_ns
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), part)
+    # pin the in-place shape exactly: the directory keeps its stamp,
+    # the part file is strictly newer than before
+    os.utime(ds, ns=(dir_stat.st_atime_ns, dir_stat.st_mtime_ns))
+    os.utime(part, ns=(part_mtime + 10**9, part_mtime + 10**9))
+
+    back = load_table(spark, tmp, "part")
+    assert back.columns == ["a", "b"]
+    assert sorted(r["b"] for r in back.collect()) == ["x", "y"]
+    # one entry per path for the live application
+    app = spark.sparkContext.applicationId
+    assert [k for k in tables._SCHEMA_CACHE if k[1] == ds] == [(app, ds)]
+
+
+def test_schema_cache_evicts_other_applications(spark, tmp):
+    """Entries from an application that is no longer the caller's are
+    dropped on the next insert, so the cache stays bounded across
+    sessions instead of growing by one schema per path per session."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from citibike_analysis_spark.sources import tables
+    from citibike_analysis_spark.sources.tables import load_table
+
+    pq.write_table(pa.table({"a": [1]}), os.path.join(tmp, "t.parquet"))
+    stale = ("app-finished-long-ago", os.path.join(tmp, "t.parquet"))
+    tables._SCHEMA_CACHE[stale] = (0, None)
+    load_table(spark, tmp, "t")
+    assert stale not in tables._SCHEMA_CACHE
+    assert {k[0] for k in tables._SCHEMA_CACHE} == {
+        spark.sparkContext.applicationId
+    }
